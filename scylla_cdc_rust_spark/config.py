@@ -32,10 +32,7 @@ class CDCPipelineConfig:
     load_progress: bool = True
 
     # layout / scale knobs
-    num_shuffle_partitions: int = 32
     target_num_buckets: int = 32  # target-table hash buckets (4096 at 100 TB)
-    salt_factor: int = 8  # hot-stream salting fan-out (north rule)
-    hot_key_threshold: int = 100_000  # events per key per batch → salt
 
     # payload column collection modes (model.COLLECTION_MODES)
     collection_modes: dict[str, str] = field(
@@ -48,9 +45,6 @@ class CDCPipelineConfig:
 
     # streaming
     max_files_per_trigger: int = 64
-
-    # exactly-once / lineage
-    keep_tombstones: bool = True  # retain delete tombstones for stale-replay safety
 
     # maintenance: drop superseded COW bucket dirs every N applied
     # windows (directory-scan only, no data rewrite; 0 = never)

@@ -791,15 +791,21 @@ def finalize(
     key: str | list[str] = "doc_id",
     payload: list[str] | None = None,
     collection_modes: dict[str, str] | None = None,
+    bookkeeping: bool = False,
 ) -> DataFrame:
-    """Delta applied to an empty table → final visible state."""
+    """Delta applied to an empty table → final visible state.
+
+    ``bookkeeping``: also emit the target-table columns ``__has_marker``
+    (the delta's own row marker — a row that only UPDATEs created has
+    none, so a later delete of its last live cell removes it) and
+    ``is_deleted`` (always false: only existing rows are kept)."""
     keys = [key] if isinstance(key, str) else list(key)
     payload = payload or _payload_from_delta(delta, key)
     cell_cols, set_cols, map_cols, udt_cols = split_modes_full(
         payload, collection_modes or {"tokens": "set"}
     )
     d = lambda n: F.col(n)  # noqa: E731
-    values, exists, _, _ = _exists_and_values(
+    values, exists, marker, _ = _exists_and_values(
         d, cell_cols, set_cols, None, map_cols,
         _udt_fields_from_delta(delta, udt_cols),
     )
@@ -809,6 +815,8 @@ def finalize(
         F.when(F.col("last_ord").isNotNull(), F.col("ttl_v")).alias("ttl"),
         F.col("last_ord"),
     ]
+    if bookkeeping:
+        proj += [marker.alias("__has_marker"), F.lit(False).alias("is_deleted")]
     return delta.where(exists).select(*proj)
 
 
@@ -975,10 +983,3 @@ def present(df: DataFrame, collection_modes: dict[str, str] | None = None) -> Da
                 ),
             )
     return df
-
-
-def with_bookkeeping(final_state: DataFrame) -> DataFrame:
-    """Lift a finalize() result into the target-table physical schema."""
-    return final_state.withColumn("__has_marker", F.lit(True)).withColumn(
-        "is_deleted", F.lit(False)
-    )

@@ -32,8 +32,9 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from scylla_cdc_rust_spark.operators.fold import apply_delta, with_bookkeeping
+from scylla_cdc_rust_spark.operators.fold import apply_delta, finalize
 
 BUCKET_COL = "__bucket"
 
@@ -92,11 +93,6 @@ class ParquetMergeTable:
 
     # ---------- reads ----------
 
-    def _read_paths(self, paths: list[str]) -> DataFrame:
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.path, p) for p in paths]
-        )
-
     def read(
         self,
         buckets: list[int] | None = None,
@@ -107,7 +103,11 @@ class ParquetMergeTable:
         ``at_version`` time-travels to an older snapshot (Iceberg's
         ``VERSION AS OF``): every commit keeps its manifest, so any
         version not yet expired by ``vacuum`` resolves to its exact
-        bucket→file mapping."""
+        bucket→file mapping.
+
+        Files are read with the manifest's recorded table schema, so no
+        job infers it from parquet footers, and a column an older
+        bucket file lacks (a column add) reads as null."""
         m = self._manifest(at_version)
         if m is None:
             return None
@@ -116,7 +116,10 @@ class ParquetMergeTable:
             sel = {b: p for b, p in sel.items() if int(b) in set(buckets)}
         if not sel:
             return None
-        return self._read_paths(sorted(set(sel.values())))
+        schema = T.StructType.fromJson(json.loads(m["schema"]))
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.path, p) for p in sorted(set(sel.values()))]
+        )
 
     def read_visible(self, at_version: int | None = None) -> DataFrame | None:
         df = self.read(at_version=at_version)
@@ -298,10 +301,6 @@ class ParquetMergeTable:
             return {"buckets_rewritten": 0, "rows_written": 0, "seconds": 0.0}
 
         # ---- schema evolution (column adds / type widenings) ----
-        import json as _json
-
-        from pyspark.sql import types as T
-
         from scylla_cdc_rust_spark.operators.fold import _payload_from_delta
         from scylla_cdc_rust_spark.operators.schema_evolution import diff_schemas
 
@@ -316,7 +315,7 @@ class ParquetMergeTable:
         m0 = self._manifest()
         stored_struct = None
         if m0 is not None and m0.get("schema"):
-            full = T.StructType.fromJson(_json.loads(m0["schema"]))
+            full = T.StructType.fromJson(json.loads(m0["schema"]))
             book = {self.key, "ttl", "last_ord", "__has_marker", "is_deleted", BUCKET_COL}
             stored_struct = T.StructType(
                 [f for f in full.fields if f.name not in book]
@@ -338,16 +337,19 @@ class ParquetMergeTable:
                         f.name, F.col(f.name).cast(evolved[f.name])
                     )
         if current is None:
-            from scylla_cdc_rust_spark.operators.fold import finalize
-
-            new_state = with_bookkeeping(
-                finalize(
-                    delta.drop(BUCKET_COL),
-                    key=self.key,
-                    payload=payload,
-                    collection_modes=collection_modes,
-                )
+            new_state = finalize(
+                delta.drop(BUCKET_COL),
+                key=self.key,
+                payload=payload,
+                collection_modes=collection_modes,
+                bookkeeping=True,
             )
+            # columns only other buckets carry: the manifest schema
+            # written below must keep covering them
+            for c in extra_payload:
+                new_state = new_state.withColumn(
+                    c, F.lit(None).cast(stored_struct[c].dataType)
+                )
         else:
             new_state = apply_delta(
                 current.drop(BUCKET_COL),
@@ -391,14 +393,16 @@ class ParquetMergeTable:
         rel = f"data/v{new_v}"
         out_dir = os.path.join(self.path, rel)
         # one job writes all affected buckets as partition dirs; repartition
-        # by bucket first so each task owns whole buckets — Spark's dynamic
-        # partition writer otherwise falls back to a per-task sort across
-        # all open writers, which anti-scales with thread count.  (A wider
-        # spread — k×|affected| partitions to smooth bucket→task hash
-        # collisions — was A/B'd at 8× and measured ~1.8× SLOWER on the
-        # write stage: the empty no-op tasks and k× shuffle blocks cost
-        # more than the balance gain at any merge size the bench sees.)
-        new_state.repartition(len(affected), F.col(BUCKET_COL)).write.mode(
+        # by bucket first so each task owns whole buckets (one file per
+        # bucket).  The width is capped at the session's cores: a task
+        # writes its buckets one after the other, so more tasks than
+        # cores only add scheduling waves (and hashing n bucket ids into
+        # n partitions leaves about a third of them empty anyway).
+        # (A wider spread — k×|affected| partitions to smooth bucket→task
+        # hash collisions — was A/B'd at 8× and measured ~1.8× SLOWER on
+        # the write stage.)
+        width = min(len(affected), self.spark.sparkContext.defaultParallelism)
+        new_state.repartition(width, F.col(BUCKET_COL)).write.mode(
             "overwrite"
         ).partitionBy(BUCKET_COL).parquet(out_dir)
 

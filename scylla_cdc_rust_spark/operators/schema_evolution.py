@@ -7,14 +7,16 @@ that: the fold derives its payload from each batch's DataFrame schema,
 so a new column simply starts appearing in deltas.  The sink side is
 where evolution needs action:
 
-- **column add**: old buckets lack the column; reads use parquet
-  mergeSchema and surface nulls — no rewrite (Iceberg: ADD COLUMN is
-  metadata-only).
+- **column add**: old buckets lack the column; every read uses the
+  table schema the manifest records, under which a column missing from
+  a file reads as null — no rewrite (Iceberg: ADD COLUMN is
+  metadata-only).  A time-travel read uses the schema of its own
+  version's manifest.
 - **column absent from a batch**: target values pass through the merge
   untouched (apply_delta's ``extra_payload``).
-- **type widening** (int→bigint, float→double): parquet mergeSchema
-  cannot mix physical types, so the merge detects the widening against
-  the manifest schema, treats every bucket as affected once, and
+- **type widening** (int→bigint, float→double): bucket files of one
+  table must share physical types, so the merge detects the widening
+  against the manifest schema, treats every bucket as affected once, and
   rewrites with a cast (Iceberg widens via metadata; the parquet
   backend pays one rewrite — recorded in the merge stats).
 """

@@ -96,6 +96,10 @@ def apply_window(
         filtered = wm.filter_new(decoded, min_time_ms=window_begin_ms)
     needs_stats = wm is not None or count_events
     filter_active = filtered is not decoded
+    # an active filter may drop every row (a re-run over applied
+    # windows): take the stats-first path, whose bucket set is then
+    # empty and skips the merge, instead of rewriting every bucket
+    bulk = bulk and not filter_active
     cache = needs_stats and filter_active
     if cache:
         # the filtered window feeds two actions (stats + merge): cache

@@ -46,6 +46,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # PySpark wraps every F.* / DataFrame call to capture its Python
+        # call site for error messages: a stack walk plus ~5 py4j round
+        # trips per call, ~250 calls per window on the driver while the
+        # executors sit idle.  Errors still carry the JVM-side plan
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

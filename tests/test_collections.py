@@ -11,7 +11,6 @@ from scylla_cdc_rust_spark.operators.fold import (
     finalize,
     fold_delta,
     present,
-    with_bookkeeping,
 )
 from scylla_cdc_rust_spark.functions.decode import decode
 from tests.scenarios import GENERAL_MODES, GeneralLogBuilder
@@ -307,7 +306,7 @@ def test_schema_evolution_adds_map_and_udt_columns(spark, tmp_path):
     )
     df1 = decode(spark_df_via_parquet(spark, t1, tmp_path / "b1"))
     d1 = fold_delta(df1, collection_modes={"vals": "list_delta"})
-    state1 = with_bookkeeping(finalize(d1, collection_modes={"vals": "list_delta"}))
+    state1 = finalize(d1, collection_modes={"vals": "list_delta"}, bookkeeping=True)
     assert "attrs" not in state1.columns and "meta" not in state1.columns
 
     b2 = GeneralLogBuilder()
@@ -351,7 +350,7 @@ def test_compose_general_modes(spark, tmp_path):
     df2 = decode(spark_df_via_parquet(spark, t2, tmp_path / "b2"))
     d1 = fold_delta(df1, collection_modes=GENERAL_MODES)
     d2 = fold_delta(df2, collection_modes=GENERAL_MODES)
-    state1 = with_bookkeeping(finalize(d1, collection_modes=GENERAL_MODES))
+    state1 = finalize(d1, collection_modes=GENERAL_MODES, bookkeeping=True)
     merged = apply_delta(
         state1, d2, collection_modes=GENERAL_MODES, keep_tombstones=False
     )

@@ -33,9 +33,9 @@ def windowed_apply(spark, tbl: pa.Table, n_windows: int, modes=MODES):
         batch = spark_df_from_arrow(spark, tbl.take(pa.array(idx)))
         delta = fold_delta(decode(batch), collection_modes=modes)
         if target is None:
-            from scylla_cdc_rust_spark.operators.fold import with_bookkeeping
-
-            target = with_bookkeeping(finalize(delta, payload=PAYLOAD, collection_modes=modes))
+            target = finalize(
+                delta, payload=PAYLOAD, collection_modes=modes, bookkeeping=True
+            )
         else:
             target = apply_delta(
                 target, delta, payload=PAYLOAD, collection_modes=modes
@@ -75,12 +75,10 @@ def test_reapply_same_window_is_idempotent_under_lww(spark):
     tbl = generate_log(LogSpec(n_events=4_000, n_docs=150, seed=9))
     oracle = oracle_replay(tbl, collection_modes=MODES)
 
-    from scylla_cdc_rust_spark.operators.fold import with_bookkeeping
-
     df = spark_df_from_arrow(spark, tbl)
     delta = fold_delta(decode(df), collection_modes=MODES)
-    target = with_bookkeeping(
-        finalize(delta, payload=PAYLOAD, collection_modes=MODES)
+    target = finalize(
+        delta, payload=PAYLOAD, collection_modes=MODES, bookkeeping=True
     ).localCheckpoint(eager=True)
 
     # replay the whole log again on top of the final state
@@ -101,7 +99,6 @@ def test_windowed_apply_arrays_impl(spark):
         apply_delta,
         finalize,
         fold_delta,
-        with_bookkeeping,
     )
 
     tbl = generate_log(LogSpec(n_events=6_000, n_docs=250, seed=61))
@@ -117,8 +114,8 @@ def test_windowed_apply_arrays_impl(spark):
         batch = spark_df_from_arrow(spark, tbl.take(pa.array(idx)))
         delta = fold_delta(decode(batch), collection_modes=MODES, set_impl="arrays")
         if target is None:
-            target = with_bookkeeping(
-                finalize(delta, payload=PAYLOAD, collection_modes=MODES)
+            target = finalize(
+                delta, payload=PAYLOAD, collection_modes=MODES, bookkeeping=True
             )
         else:
             target = apply_delta(target, delta, payload=PAYLOAD, collection_modes=MODES)

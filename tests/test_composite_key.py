@@ -24,7 +24,6 @@ from scylla_cdc_rust_spark.operators.fold import (
     fold,
     fold_delta,
     partition_tombstones,
-    with_bookkeeping,
 )
 from tests.scenarios import T0
 from tests.util import spark_df_via_parquet
@@ -161,7 +160,7 @@ def test_partition_delete_across_batches(spark, tmp_path):
 
     df1 = decode(spark_df_via_parquet(spark, t1, tmp_path / "b1"))
     d1 = fold_delta(df1, key=KEYS, collection_modes={}, partition_key="pk")
-    state1 = with_bookkeeping(finalize(d1, key=KEYS, collection_modes={}))
+    state1 = finalize(d1, key=KEYS, collection_modes={}, bookkeeping=True)
     assert {tuple(r[k] for k in KEYS) for r in state1.collect()} == {
         (0, 0), (0, 1), (1, 0)
     }

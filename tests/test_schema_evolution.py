@@ -1,6 +1,7 @@
 """Schema evolution (M6, north rule): mid-log column add + int→long
 widening propagated through the merge sink."""
 
+import glob
 import os
 
 import pyarrow as pa
@@ -106,10 +107,25 @@ def test_mid_log_add_and_widen_end_to_end(spark, tmp_path):
 
 
 def test_batch_missing_column_passes_target_through(spark, tmp_path):
-    """Epoch 1 does NOT carry `source` — target values must survive."""
+    """Epoch 1 does NOT carry `source` — target values must survive,
+    also when a later window of it only fills a bucket that was empty
+    (the table schema then still covers `source`)."""
+    from pyspark.sql import functions as F
+
+    from scylla_cdc_rust_spark.operators.merge import bucket_of
+
     tmp = str(tmp_path)
+    bk = {
+        r["d"]: r["b"]
+        for r in spark.createDataFrame([(d,) for d in "abcdefgh"], "d string")
+        .select("d", bucket_of(F.col("d"), 4).alias("b"))
+        .collect()
+    }
+    z = next(d for d in "bcdefgh" if bk[d] != bk["a"])
     b0 = LogBuilder().insert("a", [1], source="web")
     b1 = LogBuilder().update("a", n_tok=42)
+    b1._t += 10  # next window
+    b1.insert(z, [2])
     for r in b1.rows:
         r["cdc_time_ms"] += 10_000_000
         r["epoch"] = 1
@@ -122,7 +138,7 @@ def test_batch_missing_column_passes_target_through(spark, tmp_path):
         log_path=os.path.join(tmp, "log"),
         target_path=os.path.join(tmp, "t"),
         watermark_path=os.path.join(tmp, "wm"),
-        window_size_ms=1 << 60,
+        window_size_ms=5_000,
         target_num_buckets=4,
     )
     os.makedirs(cfg.log_path)
@@ -132,3 +148,62 @@ def test_batch_missing_column_passes_target_through(spark, tmp_path):
     table = ParquetMergeTable(spark, cfg.target_path, num_buckets=4)
     vis = {r["doc_id"]: r.asDict(recursive=True) for r in table.read_visible().collect()}
     assert vis["a"]["source"] == "web" and vis["a"]["n_tok"] == 42
+    assert vis[z]["source"] is None and vis[z]["tokens"] == [2]
+
+
+def test_reads_use_each_versions_manifest_schema(spark, tmp_path):
+    """A column add: time travel before it returns the old schema; at the
+    current version, buckets whose files predate it read the column as
+    null."""
+    docs = [f"d{i}" for i in range(12)]
+    b0 = LogBuilder()
+    for i, d in enumerate(docs):
+        b0.insert(d, [i], source="web")
+    b1 = LogBuilder().update("d0", n_tok=6)
+    b1._t += 20  # a second window: the add is not a whole-table rewrite
+    b1.update("d0", n_tok=7)
+    for r in b1.rows:
+        r["cdc_time_ms"] += 10_000_000
+        r["epoch"] = 1
+    t1 = b1.build()
+    t1 = t1.append_column("lang", pa.array(["en", None], pa.string()))
+    t1 = t1.append_column("cdc$deleted_lang", pa.array([False, False]))
+
+    cfg = CDCPipelineConfig(
+        log_path=os.path.join(str(tmp_path), "log"),
+        target_path=os.path.join(str(tmp_path), "t"),
+        watermark_path=os.path.join(str(tmp_path), "wm"),
+        window_size_ms=5_000,
+        target_num_buckets=4,
+    )
+    write_epoch(b0.build(), cfg.log_path, 0)
+    replay(spark, cfg, MODES)
+    table = ParquetMergeTable(spark, cfg.target_path, num_buckets=4)
+    v_before = table.version()
+    before = table.read(at_version=v_before).schema
+
+    write_epoch(t1, cfg.log_path, 1)
+    replay(spark, cfg, MODES)
+    assert table.version() > v_before
+    assert table.read(at_version=v_before).schema == before
+    assert "lang" not in before.names
+
+    # some buckets were not rewritten by the add and their files lack it
+    m = table._manifest()
+    old = [
+        p for p in m["buckets"].values()
+        if "lang" not in pq.read_schema(
+            glob.glob(os.path.join(cfg.target_path, p, "*.parquet"))[0]
+        ).names
+    ]
+    assert old
+    vis = {r["doc_id"]: r for r in table.read_visible().collect()}
+    assert set(vis) == set(docs)
+    assert vis["d0"]["lang"] == "en" and vis["d0"]["n_tok"] == 7
+    untouched = [
+        r["doc_id"] for r in table.read(
+            buckets=[int(b) for b, p in m["buckets"].items() if p in old]
+        ).collect()
+    ]
+    assert untouched
+    assert all(vis[d]["lang"] is None for d in untouched)

@@ -83,9 +83,11 @@ class CDCLogReaderBuilder:
         return self
 
     def keyspace(self, _ks: str) -> "CDCLogReaderBuilder":
-        return self  # lake-path engines address the log by path
+        """Ignores its argument: the log is addressed by ``log_path``."""
+        return self
 
     def table_name(self, _t: str) -> "CDCLogReaderBuilder":
+        """Ignores its argument: the log is addressed by ``log_path``."""
         return self
 
     # --- reference knobs (log_reader.rs:91-476) ---
@@ -118,7 +120,9 @@ class CDCLogReaderBuilder:
         return self
 
     def pause_between_saves(self, _ms: int) -> "CDCLogReaderBuilder":
-        return self  # per-batch commits are strictly stronger
+        """Ignores its argument: progress is saved at every window
+        commit, which is strictly stronger than a timed save."""
+        return self
 
     # --- engine-side outputs ---
     def target_path(self, path: str) -> "CDCLogReaderBuilder":

@@ -116,14 +116,6 @@ class PayloadColumn:
     has_deleted_elements: bool  # has cdc$deleted_elements_<name> companion
     spark_type: T.DataType = None
 
-    @property
-    def deleted_col(self) -> str:
-        return DELETED_PREFIX + self.name
-
-    @property
-    def deleted_elements_col(self) -> str:
-        return DELETED_ELEMS_PREFIX + self.name
-
 
 @dataclass
 class CDCSchema:
@@ -182,10 +174,6 @@ class CDCSchema:
                     spark_type=f.dataType,
                 )
         return out
-
-    def non_cdc_column_names(self) -> list[str]:
-        """consumer.rs:308-310 get_non_cdc_column_names."""
-        return list(self.payload)
 
 
 # ---------------------------------------------------------------------------

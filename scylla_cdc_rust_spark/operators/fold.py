@@ -83,14 +83,6 @@ def _dcol(df: DataFrame, name: str) -> Column:
     return F.coalesce(F.col(name), F.lit(False)) if name in df.columns else F.lit(False)
 
 
-def split_modes(
-    payload: list[str], collection_modes: dict[str, str] | None
-) -> tuple[list[str], list[str]]:
-    """Back-compat 2-way split: (cell_cols, set_cols). Cell = atomic|list."""
-    cell, sets, maps, udts = split_modes_full(payload, collection_modes)
-    return cell, sets
-
-
 def split_modes_full(
     payload: list[str], collection_modes: dict[str, str] | None
 ) -> tuple[list[str], list[str], list[str], list[str]]:

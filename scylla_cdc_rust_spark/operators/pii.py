@@ -17,7 +17,7 @@ with a 9-digit local part is one email, not also an account number).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -30,14 +30,6 @@ PII_CLASSES = (
     ("ips", IPV4_RE, "<IP>"),
     ("longnums", LONGNUM_RE, "<NUM>"),
 )
-
-
-def scrub_pii(text: Column | str) -> Column:
-    """The scrubbed text: every PII class replaced by its placeholder."""
-    c = F.col(text) if isinstance(text, str) else text
-    for _, pat, tok in PII_CLASSES:
-        c = F.regexp_replace(c, pat, tok)
-    return c
 
 
 def pii_scrub(

@@ -18,16 +18,13 @@ watcher's sleep-poll loop.
 
 from __future__ import annotations
 
-import os
-import time
-
 from pyspark.sql import SparkSession
 
 from scylla_cdc_rust_spark.config import CDCPipelineConfig
-from scylla_cdc_rust_spark.model import EPOCH
+from scylla_cdc_rust_spark.plans.pipeline import log_generations
 from scylla_cdc_rust_spark.sources.checkpoints import WatermarkStore
 from scylla_cdc_rust_spark.sources.generations import GenerationFetcher
-from scylla_cdc_rust_spark.streaming.stream_pipeline import StreamingReplay
+from scylla_cdc_rust_spark.streaming.stream_pipeline import stream_generation
 
 
 class ContinuousDriver:
@@ -44,41 +41,29 @@ class ContinuousDriver:
         self.fetcher = GenerationFetcher(meta_dir)
         self.modes = collection_modes
         self.key = key
-        self.wm = WatermarkStore(spark, cfg.watermark_path)
+        self.wm = WatermarkStore.from_config(spark, cfg)
         self.n_applied = 0
         self.generations_done: list[int] = []
 
-    def _run_generation(self, epoch: int) -> None:
-        ecfg = CDCPipelineConfig(**{**self.cfg.__dict__})
-        ecfg.checkpoint_location = f"{self.cfg.checkpoint_location}/epoch={epoch}"
-        ep_dir = os.path.join(self.cfg.log_path, f"{EPOCH}={epoch}")
-        if os.path.isdir(ep_dir):
-            ecfg.log_path = ep_dir
-        sr = StreamingReplay(
-            self.spark, ecfg, collection_modes=self.modes, key=self.key,
-            generation=epoch,
-        )
-        # drain=True: the barrier — this generation is fully applied
-        # before the next opens (log_reader.rs:171-188)
-        self.n_applied += sr.run_available_now(drain=True)
-        self.generations_done.append(epoch)
+    def _run_generations(self, epochs: list[int]) -> None:
+        for gen in log_generations(self.spark, self.cfg, self.wm, epochs):
+            self.n_applied += stream_generation(
+                self.spark, self.cfg, gen, self.modes, self.key
+            )
+            self.generations_done.append(gen.epoch)
 
     def run(self, idle_timeout_s: float = 2.0, poll_s: float = 0.2) -> int:
         """Process all known generations in order, then keep polling for
         new ones until none appears for idle_timeout_s (stop analog of
         log_reader.rs:60-69)."""
-        start_gen = self.wm.last_generation()
-        last_start_ms = -1
-        for g in self.fetcher.fetch_all_generations():
-            if start_gen is not None and g.epoch < start_gen:
-                continue
-            self._run_generation(g.epoch)
-            last_start_ms = max(last_start_ms, g.start_ms)
+        gens = self.fetcher.fetch_all_generations()
+        self._run_generations([g.epoch for g in gens])
+        last_start_ms = max((g.start_ms for g in gens), default=-1)
         while True:
             nxt = self.fetcher.wait_for_next_generation(
                 last_start_ms, sleep_s=poll_s, timeout_s=idle_timeout_s
             )
             if nxt is None:
                 return self.n_applied
-            self._run_generation(nxt.epoch)
+            self._run_generations([nxt.epoch])
             last_start_ms = nxt.start_ms

@@ -1,20 +1,22 @@
 """Batch replay pipeline: epoch-sequenced, windowed, exactly-once.
 
 The driver-side control flow mirrors the reference's
-CDCReaderWorker::run (/root/reference/scylla-cdc/src/log_reader.rs:116-236):
+CDCReaderWorker::run (log_reader.rs:116-236), and every apply path
+(batch replay, streaming, repair) shares its three pieces, defined here:
 
-- generations (epochs) are processed strictly sequentially — epoch k is
-  fully applied before k+1 opens (the generation barrier,
-  log_reader.rs:171-188) — here a plain Python loop over sorted epochs;
-- within an epoch, the log is consumed in half-open time windows
-  [begin, begin+window) (StreamReader::fetch_cdc windowed loop,
-  stream_reader.rs:330-345), each window = one decode → watermark-filter
-  → fold_delta → MERGE → watermark-commit cycle;
-- resume: generation from the sentinel checkpoint (log_reader.rs:513-528),
-  window begin = max(lower, saved watermark) (stream_reader.rs:226-244);
-  re-read of a partially-applied window is safe because the merge is
-  idempotent (LWW staleness gate) and the watermark filter drops
-  already-applied events.
+- ``log_generations`` — generation discovery: the generations still to
+  apply, in order; epoch k is fully applied before k+1 opens (the
+  generation barrier, log_reader.rs:171-188) and a resume starts at the
+  saved generation (log_reader.rs:513-528);
+- ``plan_windows`` — the half-open time windows [begin, begin+window)
+  of one generation (StreamReader::fetch_cdc windowed loop,
+  stream_reader.rs:330-345), starting at max(start, lower, saved
+  watermark) (stream_reader.rs:226-244); re-reading a partially-applied
+  window is safe because the merge is idempotent (LWW staleness gate)
+  and the watermark filter drops already-applied events;
+- ``run_windows`` — the window loop: one ``apply_window`` cycle
+  (decode → watermark-filter → fold_delta → MERGE → watermark-commit)
+  per planned window.
 
 Everything inside a window is one declarative Spark plan — scan with
 predicate pushdown on (epoch, cdc_time_ms), fold aggregations, bucket-
@@ -23,8 +25,11 @@ pruned merge join.
 
 from __future__ import annotations
 
+import os
 import time
+from collections.abc import Iterable
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +40,7 @@ from scylla_cdc_rust_spark.model import EPOCH, STREAM_ID, TIME_MS, CDCSchema
 from scylla_cdc_rust_spark.operators.fold import fold_delta
 from scylla_cdc_rust_spark.operators.merge import ParquetMergeTable
 from scylla_cdc_rust_spark.sources.checkpoints import WatermarkStore
+from scylla_cdc_rust_spark.sources.log_source import epochs_present, time_bounds
 
 
 @dataclass
@@ -43,7 +49,6 @@ class ReplayStats:
     n_batches: int = 0
     epochs: list[int] = field(default_factory=list)
     seconds: float = 0.0
-    merge_stats: list[dict] = field(default_factory=list)
 
     @property
     def events_per_sec(self) -> float:
@@ -177,6 +182,145 @@ def apply_window(
             filtered.unpersist()
 
 
+class LogGeneration(NamedTuple):
+    """One generation of the change log, as the apply paths read it."""
+
+    epoch: int
+    #: its own ``epoch=N`` partition dir, or the whole log when flat
+    path: str
+    #: (min, max) event time from the parquet footers; None when they
+    #: cannot tell (a flat log holding several generations)
+    bounds: tuple[int, int] | None
+    #: the flat log as discovery already read it (saves a second read)
+    log: DataFrame | None = None
+
+    def frame(self, spark: SparkSession) -> DataFrame:
+        """The generation's rows.  A partition dir is read on its own:
+        each generation may carry an evolved schema (M6)."""
+        log = self.log if self.log is not None else spark.read.parquet(self.path)
+        return generation_rows(log, self.epoch)
+
+
+def generation_rows(df: DataFrame, epoch: int) -> DataFrame:
+    """``df`` cut to one generation: a flat log's epoch column selects
+    its rows; a partition dir's frame has no such column."""
+    return df.where(F.col(EPOCH) == epoch) if EPOCH in df.columns else df
+
+
+def log_generations(
+    spark: SparkSession,
+    cfg: CDCPipelineConfig,
+    wm: WatermarkStore | None,
+    epochs: list[int] | None = None,
+) -> list[LogGeneration]:
+    """The generations still to apply, in order: every one at or after
+    the saved last generation (log_reader.rs:513-528), the last one
+    possibly half applied.
+
+    ``epochs`` is the list a metadata table supplies
+    (``GenerationFetcher``); without it the log is listed — the analog
+    of scanning cdc_generation_timestamps (stream_generations.rs:136-144):
+    its ``epoch=N`` partition dirs, else a flat log's distinct epoch
+    column (one Spark job), else one generation 0."""
+    log = None
+    if epochs is None:
+        epochs = epochs_present(cfg.log_path)
+        if epochs is None:
+            log = spark.read.parquet(cfg.log_path)
+            epochs = (
+                sorted(r[0] for r in log.select(EPOCH).distinct().collect())
+                if EPOCH in log.columns
+                else [0]
+            )
+    # footer bounds of a flat log are the generation's only when it is
+    # the log's one generation
+    single = log is not None and EPOCH not in log.columns
+    last = wm.last_generation() if wm else None
+    out = []
+    for ep in epochs:
+        if last is not None and ep < last:
+            continue  # fully applied (the generation barrier, O3)
+        ep_dir = os.path.join(cfg.log_path, f"{EPOCH}={ep}")
+        if os.path.isdir(ep_dir):
+            out.append(LogGeneration(ep, ep_dir, time_bounds(ep_dir)))
+        else:
+            bounds = time_bounds(cfg.log_path) if single else None
+            out.append(LogGeneration(ep, cfg.log_path, bounds, log))
+    return out
+
+
+def plan_windows(
+    lo: int,
+    hi: int,
+    floors: Iterable[int],
+    window_size_ms: int,
+    start_timestamp_ms: int = 0,
+    end_timestamp_ms: int | None = None,
+    *,
+    tailing: bool = False,
+) -> list[tuple[int, int, bool]]:
+    """The half-open windows ``(begin, end, bulk)`` that apply a
+    generation's events in ``[lo, hi)``, given the saved per-stream
+    ``floors`` (window ends).  Pure: no Spark, no I/O.
+
+    - the plan starts at ``max(start_timestamp, lo, min floor)`` — the
+      resume rule (stream_reader.rs:226-244) — and stops at
+      ``min(hi, end_timestamp)`` (stop_at, log_reader.rs:60-69);
+    - skewed-resume catch-up: ``[begin, max floor)`` is ONE window —
+      ``filter_new`` drops the advanced streams' rows per their own
+      floors, so only the lagging tails are folded and the fixed
+      per-window cost is paid once, not once per intermediate window;
+    - then windows of ``window_size_ms`` (stream_reader.rs:330-345),
+      the last one cut at the stop;
+    - ``bulk``: the plan is one window over the whole generation, which
+      touches about every bucket, so the merge skips bucket pruning.
+      Never while ``tailing``: ``hi`` is then a reader's safe end, not
+      the generation's end."""
+    floors = list(floors)
+    begin = max(start_timestamp_ms, lo, min(floors, default=lo))
+    end = hi if end_timestamp_ms is None else min(hi, end_timestamp_ms)
+    catchup_end = max(floors, default=begin)
+    windows = []
+    b = begin
+    while b < end:
+        e = min(catchup_end if b < catchup_end else b + window_size_ms, end)
+        windows.append((b, e))
+        b = e
+    bulk = not tailing and len(windows) == 1
+    return [(b, e, bulk) for b, e in windows]
+
+
+def run_windows(
+    frame: DataFrame,
+    windows: list[tuple[int, int, bool]],
+    table: ParquetMergeTable,
+    wm: WatermarkStore | None,
+    *,
+    generation: int,
+    batch_id: int,
+    vacuum_every: int,
+    **apply_kw,
+) -> tuple[int, int]:
+    """The window loop: apply each planned window of one generation's
+    ``frame`` in order, one ``apply_window`` (decode → filter → fold →
+    merge → watermark commit) each, dropping superseded bucket dirs
+    every ``vacuum_every`` windows.  Returns (events applied, next
+    batch_id)."""
+    n = 0
+    for begin, end, bulk in windows:
+        batch = frame.where((F.col(TIME_MS) >= begin) & (F.col(TIME_MS) < end))
+        # the module global, looked up per call: tracers that wrap
+        # ``pipeline.apply_window`` see every window of every path
+        n += apply_window(
+            batch, table, wm, window_end_ms=end, window_begin_ms=begin,
+            generation=generation, batch_id=batch_id, bulk=bulk, **apply_kw,
+        )
+        batch_id += 1
+        if vacuum_every and batch_id % vacuum_every == 0:
+            table.vacuum()  # drop superseded bucket dirs (no rewrite)
+    return n, batch_id
+
+
 def replay(
     spark: SparkSession,
     cfg: CDCPipelineConfig,
@@ -192,103 +336,40 @@ def replay(
         spark, cfg.target_path, num_buckets=cfg.target_num_buckets, key=key
     )
     wm = (
-        WatermarkStore(
-            spark, cfg.watermark_path,
-            save=cfg.save_progress, load=cfg.load_progress,
-        )
+        WatermarkStore.from_config(spark, cfg)
         if cfg.watermark_path
         and track_watermarks
         and (cfg.save_progress or cfg.load_progress)
         else None
     )
-
-    # generation discovery: epochs present in the log (partition listing —
-    # the analog of scanning cdc_generation_timestamps, stream_generations.rs:136-144)
-    from scylla_cdc_rust_spark.sources.log_source import epochs_present, time_bounds
-
-    epoch_dirs = epochs_present(cfg.log_path)
-    if epoch_dirs is not None:
-        epochs, has_epoch, scoped = epoch_dirs, True, True
-    else:
-        log = spark.read.parquet(cfg.log_path)
-        has_epoch = EPOCH in log.columns
-        scoped = False
-        epochs = (
-            sorted(r[0] for r in log.select(EPOCH).distinct().collect())
-            if has_epoch
-            else [0]
-        )
-
-    # resume (C4): skip fully-applied generations
-    start_gen = wm.last_generation() if wm else None
     stats = ReplayStats()
-    batch_id = 0
-    for ep in epochs:  # generation barrier: strictly sequential (O3)
-        if start_gen is not None and ep < start_gen:
-            continue
-        if scoped:
-            # per-generation scoped read: each epoch may carry an evolved
-            # schema (column adds / widenings) — M6
-            edf = spark.read.parquet(f"{cfg.log_path}/{EPOCH}={ep}")
-        else:
-            edf = log.where(F.col(EPOCH) == ep) if has_epoch else log
-        # window bounds from parquet footer stats (driver-side metadata
-        # read); Spark aggregate only as fallback
-        bounds = time_bounds(cfg.log_path, ep if has_epoch else None)
-        if bounds is None:
+    for gen in log_generations(spark, cfg, wm):
+        edf = gen.frame(spark)
+        bounds = gen.bounds
+        if bounds is None:  # footers without stats: one Spark aggregate
             lo_hi = edf.agg(
                 F.min(TIME_MS).alias("lo"), F.max(TIME_MS).alias("hi")
             ).collect()[0]
             if lo_hi["lo"] is None:
                 continue
             bounds = (int(lo_hi["lo"]), int(lo_hi["hi"]))
-        lo = wm.resume_begin_ms(bounds[0]) if wm else bounds[0]
-        hi = bounds[1] + 1
-        if cfg.end_timestamp_ms is not None:
-            hi = min(hi, cfg.end_timestamp_ms)  # stop_at (log_reader.rs:60-69)
-        # skewed-resume catch-up: coalesce [min floor, max floor) into one
-        # window — filter_new drops advanced streams' rows per their own
-        # floors, so only lagging tails are folded and the per-window
-        # fixed cost is paid once (see streaming/stream_pipeline.py)
-        catchup_hi = None
-        if wm:
-            floors = wm.stream_floors()
-            if floors and max(floors.values()) > lo:
-                catchup_hi = min(max(floors.values()), hi)
-        # resolve 'auto' set strategy once per epoch, not per window
+        floors = wm.stream_floors().values() if wm else ()
+        windows = plan_windows(
+            bounds[0], bounds[1] + 1, floors, cfg.window_size_ms,
+            cfg.start_timestamp_ms, cfg.end_timestamp_ms,
+        )
+        # resolve the 'auto' set strategy once per generation, not per
+        # window (looked up at call time: tracers wrap the module function)
         from scylla_cdc_rust_spark.operators.fold import resolve_set_impl
 
         impl = resolve_set_impl(edf, collection_modes, key, cfg.set_impl)
-        w = cfg.window_size_ms
-        begin = lo
-        while begin < hi:
-            if catchup_hi is not None and begin < catchup_hi:
-                end = catchup_hi
-            else:
-                end = min(begin + w, hi)
-            batch = edf.where((F.col(TIME_MS) >= begin) & (F.col(TIME_MS) < end))
-            n = apply_window(
-                batch,
-                table,
-                wm,
-                window_end_ms=end,
-                window_begin_ms=begin,
-                generation=ep,
-                batch_id=batch_id,
-                collection_modes=collection_modes,
-                key=key,
-                # a single window spanning the whole epoch touches ~every
-                # bucket: skip the pruning scan (bulk-load mode)
-                bulk=(begin == lo and end == hi),
-                set_impl=impl,
-            )
-            stats.n_events += n
-            stats.n_batches += 1
-            batch_id += 1
-            begin = end
-            if cfg.vacuum_every_batches and batch_id % cfg.vacuum_every_batches == 0:
-                table.vacuum()  # drop superseded bucket dirs (no rewrite)
-        stats.epochs.append(ep)
+        n, stats.n_batches = run_windows(
+            edf, windows, table, wm, generation=gen.epoch,
+            batch_id=stats.n_batches, vacuum_every=cfg.vacuum_every_batches,
+            collection_modes=collection_modes, key=key, set_impl=impl,
+        )
+        stats.n_events += n
+        stats.epochs.append(gen.epoch)
     stats.seconds = time.time() - t0
     return stats
 
@@ -321,8 +402,9 @@ def repair_span(
        (``ParquetMergeTable.delete_keys``, bucket-pruned COW rewrite —
        erasing ``last_ord`` bookkeeping so nothing is "stale");
     3. re-folds their COMPLETE history from the log — clamped to
-       ``cfg.end_timestamp_ms`` like every other apply path (stop_at
-       must not resurrect post-stop history) — through the same
+       ``[cfg.start_timestamp_ms, cfg.end_timestamp_ms)`` like every
+       other apply path (history before start is outside the replay,
+       stop_at must not resurrect post-stop history) — through the same
        epoch-sequential apply path as ``replay``: final state per key
        is the fold of ALL its events, the fold≡replay equivalence the
        test suite pins.
@@ -351,80 +433,53 @@ def repair_span(
     histories; 0 when the span holds no events).
     """
     import json
-    import os
 
+    begin_ms = max(begin_ms, cfg.start_timestamp_ms)
     if cfg.end_timestamp_ms is not None:
         end_ms = min(end_ms, cfg.end_timestamp_ms)
+    collection_modes = collection_modes or dict(cfg.collection_modes)
     # a crashed repair's journal may only be cleared by re-running the
     # RECORDED span (or a superset): repairing a disjoint/narrower span
     # would overwrite the journal and, on completion, remove it while
     # the earlier span's keys are still deleted or partially folded —
     # silent data loss defeating the crash-safety bracket (ADVICE r5)
+    # ... and with the recorded collection_modes: other modes would
+    # re-fold the reset keys unlike every other key, then clear the journal
     prev = pending_repair(cfg)
-    if prev is not None and not (
-        begin_ms <= prev["begin_ms"] and end_ms >= prev["end_ms"]
+    recorded = prev and prev.get("collection_modes")
+    if prev is not None and (
+        not (begin_ms <= prev["begin_ms"] and end_ms >= prev["end_ms"])
+        or recorded not in (None, collection_modes)
     ):
-        hint = (
-            f" (with collection_modes={prev['collection_modes']})"
-            if prev.get("collection_modes") is not None
-            else ""
-        )
+        hint = f" and collection_modes={recorded}" if recorded else ""
         raise RuntimeError(
             "a crashed repair_span left the target inconsistent for span "
-            f"[{prev['begin_ms']}, {prev['end_ms']}); this call covers only "
-            f"[{begin_ms}, {end_ms}) — re-run with the recorded span (or a "
-            f"superset){hint} so its reset keys are re-folded.  Note that "
-            "cfg.end_timestamp_ms clamps the span BEFORE this check: if it "
-            "was lowered since the crash, restore it (or pass a wider end) "
-            "so the clamped span still covers the recorded one"
+            f"[{prev['begin_ms']}, {prev['end_ms']}); this call covers "
+            f"[{begin_ms}, {end_ms}) with collection_modes={collection_modes}"
+            f" — re-run with the recorded span (or a superset){hint} so its "
+            "reset keys are re-folded.  Note that cfg.start_timestamp_ms and "
+            "cfg.end_timestamp_ms clamp the span BEFORE this check: if either "
+            "was moved since the crash, restore it (or pass a wider span) so "
+            "the clamped span still covers the recorded one"
         )
     if end_ms <= begin_ms:
         _refuse_empty_recovery(prev, begin_ms, end_ms)
         return 0
-    collection_modes = collection_modes or dict(cfg.collection_modes)
     table = ParquetMergeTable(
         spark, cfg.target_path, num_buckets=cfg.target_num_buckets, key=key
     )
     from scylla_cdc_rust_spark.operators.fold import resolve_set_impl
-    from scylla_cdc_rust_spark.sources.log_source import (
-        epochs_present,
-        time_bounds,
-    )
 
-    epoch_dirs = epochs_present(cfg.log_path)
-    if epoch_dirs is not None:
-        # per-generation scoped reads: epochs may carry evolved schemas
-        frames = [
-            (ep, True, spark.read.parquet(f"{cfg.log_path}/{EPOCH}={ep}"))
-            for ep in epoch_dirs
-        ]
-    else:
-        log0 = spark.read.parquet(cfg.log_path)
-        if EPOCH in log0.columns:
-            eps = sorted(
-                r[0] for r in log0.select(EPOCH).distinct().collect()
-            )
-            frames = [
-                (ep, False, log0.where(F.col(EPOCH) == ep)) for ep in eps
-            ]
-        else:
-            frames = [(0, False, log0)]
-
+    gens = [(g, g.frame(spark)) for g in log_generations(spark, cfg, None)]
     # affected keys: only generations whose footer time bounds intersect
-    # the span are scanned for the key set (one whole-log bounds read
-    # when the log is not epoch-partitioned — per-epoch pruning needs
-    # the directory layout)
-    flat_bounds = time_bounds(cfg.log_path, None) if epoch_dirs is None else None
-    span_parts = []
-    for ep, scoped, edf in frames:
-        b = time_bounds(cfg.log_path, ep) if scoped else flat_bounds
-        if b is not None and (b[1] < begin_ms or b[0] >= end_ms):
-            continue
-        span_parts.append(
-            edf.where(
-                (F.col(TIME_MS) >= begin_ms) & (F.col(TIME_MS) < end_ms)
-            ).select(key)
-        )
+    # the span are scanned for the key set
+    span_parts = [
+        edf.where(
+            (F.col(TIME_MS) >= begin_ms) & (F.col(TIME_MS) < end_ms)
+        ).select(key)
+        for g, edf in gens
+        if g.bounds is None or (g.bounds[1] >= begin_ms and g.bounds[0] < end_ms)
+    ]
     if not span_parts:
         _refuse_empty_recovery(prev, begin_ms, end_ms)
         return 0
@@ -451,8 +506,10 @@ def repair_span(
             )
         table.delete_keys(span_keys)
         total = 0
-        for ep, _scoped, edf in frames:  # generation barrier, as in replay
-            hist = edf.join(span_keys, key, "left_semi")
+        for g, edf in gens:  # generation barrier, as in replay
+            hist = edf.join(span_keys, key, "left_semi").where(
+                F.col(TIME_MS) >= cfg.start_timestamp_ms
+            )
             if cfg.end_timestamp_ms is not None:
                 hist = hist.where(F.col(TIME_MS) < cfg.end_timestamp_ms)
             if hist.isEmpty():  # generations without affected-key events
@@ -463,7 +520,7 @@ def repair_span(
                 table,
                 None,  # no watermark commit: floors must not move
                 window_end_ms=end_ms,
-                generation=ep,
+                generation=g.epoch,
                 batch_id=-1,
                 collection_modes=collection_modes,
                 key=key,
@@ -507,7 +564,6 @@ def pending_repair(cfg: CDCPipelineConfig) -> dict | None:
     collection_modes}), or None.  Recovery: re-run ``repair_span`` with
     the recorded span (and modes, when recorded)."""
     import json
-    import os
 
     p = os.path.join(cfg.target_path, REPAIR_JOURNAL)
     if not os.path.exists(p):

@@ -7,7 +7,9 @@ Reference parity (/root/reference/scylla-cdc/src/checkpoints.rs):
 - a sentinel row (stream_id = 0x00) records the last generation
   (checkpoints.rs:146-148,175-187)
 - resume rule: window_begin = max(lower, min over streams of saved ts)
-  (stream_reader.rs:226-244); generation resume log_reader.rs:513-528.
+  (stream_reader.rs:226-244), applied to ``stream_floors`` by
+  ``plans.pipeline.plan_windows``; generation resume
+  log_reader.rs:513-528.
 
 Differences by design: the reference saves on a timer
 (pause_between_saves, checkpoints.rs:32-60); we commit at every
@@ -66,6 +68,15 @@ class WatermarkStore:
         self._state: dict[bytes, tuple] | None = None  # sid → (gen, t, batch, n)
         os.makedirs(path, exist_ok=True)
 
+    @classmethod
+    def from_config(cls, spark: SparkSession, cfg) -> "WatermarkStore":
+        """The store at ``cfg.watermark_path`` with ``cfg``'s save/load
+        progress flags — the one place every apply path builds it."""
+        return cls(
+            spark, cfg.watermark_path,
+            save=cfg.save_progress, load=cfg.load_progress,
+        )
+
     def _load_state(self) -> dict[bytes, tuple]:
         if self._state is None:
             self._state = {}
@@ -99,15 +110,6 @@ class WatermarkStore:
         """log_reader.rs:513-528: resume from the saved generation."""
         g = self._load_state().get(GENERATION_SENTINEL)
         return int(g[0]) if g else None
-
-    def resume_begin_ms(self, lower_ms: int) -> int:
-        """stream_reader.rs:226-244: max(lower, min of saved stream times)."""
-        times = [
-            v[1]
-            for k, v in self._load_state().items()
-            if k != GENERATION_SENTINEL and v[1] is not None
-        ]
-        return max(lower_ms, int(min(times))) if times else lower_ms
 
     def stream_floors(self) -> dict[bytes, int]:
         """Per-stream saved floors (window ends).  Lets a resume coalesce

@@ -5,7 +5,8 @@ window bounds before issuing the read.  ``time_bounds`` answers the
 "what range does this generation cover" question from parquet row-group
 footer statistics — a driver-side metadata read, no Spark job — the
 analog of the clustering-index min/max the reference gets for free from
-Scylla.  Falls back to a Spark aggregate when stats are unavailable.
+Scylla.  ``replay`` falls back to a Spark aggregate when stats are
+unavailable.
 """
 
 from __future__ import annotations
@@ -18,18 +19,12 @@ import pyarrow.parquet as pq
 from scylla_cdc_rust_spark.model import EPOCH, TIME_MS
 
 
-def time_bounds(log_path: str, epoch: int | None = None) -> tuple[int, int] | None:
-    """(min, max) of cdc_time_ms from parquet footers, or None."""
-    root = log_path
-    if epoch is not None:
-        cand = os.path.join(log_path, f"{EPOCH}={epoch}")
-        if os.path.isdir(cand):
-            root = cand
-        else:
-            return None
+def time_bounds(path: str) -> tuple[int, int] | None:
+    """(min, max) of cdc_time_ms from the parquet footers under ``path``,
+    or None."""
     lo = hi = None
     try:
-        ds = pads.dataset(root, format="parquet")
+        ds = pads.dataset(path, format="parquet")
         for frag in ds.get_fragments():
             md = pq.ParquetFile(frag.path).metadata
             # index among parquet LEAF columns (nested cols expand to leaves)

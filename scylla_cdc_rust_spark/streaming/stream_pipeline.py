@@ -28,13 +28,21 @@ Maps the reference's continuous reader onto Spark Structured Streaming:
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from scylla_cdc_rust_spark.config import CDCPipelineConfig
-from scylla_cdc_rust_spark.model import TIME_MS, EPOCH
+from scylla_cdc_rust_spark.model import STREAM_ID, TIME_MS
 from scylla_cdc_rust_spark.operators.merge import ParquetMergeTable
-from scylla_cdc_rust_spark.plans.pipeline import apply_window
+from scylla_cdc_rust_spark.plans.pipeline import (
+    LogGeneration,
+    generation_rows,
+    log_generations,
+    plan_windows,
+    run_windows,
+)
 from scylla_cdc_rust_spark.sources.checkpoints import WatermarkStore
 
 
@@ -60,26 +68,23 @@ class StreamingReplay:
         self.table = ParquetMergeTable(
             spark, cfg.target_path, num_buckets=cfg.target_num_buckets, key=key
         )
-        self.wm = WatermarkStore(
-            spark, cfg.watermark_path,
-            save=cfg.save_progress, load=cfg.load_progress,
-        )
+        self.wm = WatermarkStore.from_config(spark, cfg)
         self.frontier_ms: int | None = None  # max event time seen
         self.floor_ms: int | None = None  # next window begin
-        #: checkpoint-derived lower bound (None when starting fresh).
-        #: Pre-loaded from the saved floors so the very first resume
-        #: batch already counts absorbed below-floor rows (the store's
-        #: state is a lazy driver-side dict — no Spark job here)
-        floors0 = self.wm.stream_floors() if cfg.load_progress else {}
-        self.resume_floor_ms: int | None = (
-            min(floors0.values()) if floors0 else None
-        )
+        #: per-stream floors saved before this run, for the window
+        #: planner and the absorb count (this run's commits move only
+        #: the live floors).  Loading them is a small Spark job, paid
+        #: here so the first resume batch already counts absorbed rows
+        self.floors0 = self.wm.stream_floors()
+        #: checkpoint-derived lower bound (None when starting fresh)
+        self.resume_floor_ms = min(self.floors0.values(), default=None)
         #: highest window end actually APPLIED in this run — the only
         #: boundary whose violation is a genuine contract break
         self.applied_end_ms: int | None = None
-        #: end of the skewed-resume catch-up span (max per-stream floor);
-        #: windows below it are coalesced into one (see _apply_upto)
-        self.catchup_end_ms: int | None = None
+        #: end of the skewed-resume catch-up span (the max saved floor):
+        #: the planner coalesces [resume_floor_ms, catchup_end_ms) into
+        #: one window
+        self.catchup_end_ms: int | None = max(self.floors0.values(), default=None)
         self._impl: str | None = None  # resolved set_impl ('auto' → concrete)
         self.batch_id = 0
         self.n_applied = 0
@@ -95,54 +100,39 @@ class StreamingReplay:
 
     def _apply_upto(self, safe_end_ms: int) -> None:
         """Apply all complete windows in [floor, safe_end)."""
-        if self.floor_ms is None or safe_end_ms <= self.floor_ms:
+        if self.floor_ms is None:
             return
-        log = self.spark.read.parquet(self.cfg.log_path)
-        if EPOCH in log.columns:
-            log = log.where(F.col(EPOCH) == self.generation)
+        cfg = self.cfg
+        windows = plan_windows(
+            self.floor_ms, safe_end_ms, self.floors0.values(),
+            cfg.window_size_ms, cfg.start_timestamp_ms, cfg.end_timestamp_ms,
+            tailing=True,
+        )
+        if not windows:
+            return
+        # re-read every call: a frame kept across micro-batches would
+        # not see log files that arrived since
+        log = generation_rows(self.spark.read.parquet(cfg.log_path), self.generation)
         if self._impl is None:  # resolve 'auto' once per run
             from scylla_cdc_rust_spark.operators.fold import resolve_set_impl
 
-            self._impl = resolve_set_impl(
-                log, self.modes, self.key, self.cfg.set_impl
-            )
-        w = self.cfg.window_size_ms
-        begin = self.floor_ms
-        while begin < safe_end_ms:
-            if self.catchup_end_ms is not None and begin < self.catchup_end_ms:
-                # skewed-resume catch-up: one coalesced window over
-                # [min floor, max floor) — the per-stream watermark
-                # filter drops already-applied rows of advanced streams,
-                # so only each lagging stream's own tail is folded, and
-                # the fixed per-window cost is paid once instead of once
-                # per intermediate window (C4 at scale)
-                end = min(self.catchup_end_ms, safe_end_ms)
-            else:
-                end = min(begin + w, safe_end_ms)
-            batch = log.where((F.col(TIME_MS) >= begin) & (F.col(TIME_MS) < end))
-            self.n_applied += apply_window(
-                batch,
-                self.table,
-                self.wm,
-                window_end_ms=end,
-                window_begin_ms=begin,
-                generation=self.generation,
-                batch_id=self.batch_id,
-                collection_modes=self.modes,
-                key=self.key,
-                set_impl=self._impl,
-            )
-            self.batch_id += 1
-            begin = end
-            if (
-                self.cfg.vacuum_every_batches
-                and self.batch_id % self.cfg.vacuum_every_batches == 0
-            ):
-                self.table.vacuum()  # drop superseded bucket dirs
-        self.floor_ms = safe_end_ms
-        self.applied_end_ms = safe_end_ms
+            self._impl = resolve_set_impl(log, self.modes, self.key, cfg.set_impl)
+        n, self.batch_id = run_windows(
+            log, windows, self.table, self.wm, generation=self.generation,
+            batch_id=self.batch_id, vacuum_every=cfg.vacuum_every_batches,
+            collection_modes=self.modes, key=self.key, set_impl=self._impl,
+        )
+        self.n_applied += n
+        self.floor_ms = self.applied_end_ms = windows[-1][1]
 
     def _on_batch(self, batch_df, _sid: int) -> None:
+        # only this generation's rows at or after start_timestamp: the
+        # rest never moves the frontier, the floor or the guards
+        batch_df = generation_rows(batch_df, self.generation)
+        if self.cfg.start_timestamp_ms:
+            batch_df = batch_df.where(
+                F.col(TIME_MS) >= self.cfg.start_timestamp_ms
+            )
         aggs = [F.max(TIME_MS).alias("mx"), F.min(TIME_MS).alias("mn")]
         src = batch_df
         track_late = self.applied_end_ms is not None
@@ -170,21 +160,20 @@ class StreamingReplay:
             # those was a spurious hard failure on a valid resume
             # (ADVICE r5; observed as a flaky late-guard trip in the
             # continuous-tailing test's drain run).
-            lo_bound = (
-                self.resume_floor_ms
-                if self.resume_floor_ms is not None
-                else -(1 << 62)
-            )
-            from scylla_cdc_rust_spark.model import STREAM_ID
-
-            own_floor = F.lit(lo_bound)
+            lo_bound = self.resume_floor_ms
+            if lo_bound is None:
+                lo_bound = -(1 << 62)
+            own_floor = saved_floor = F.lit(lo_bound)
             floors = self.wm.stream_floors()
             # narrow frames without the stream column (diagnostic use)
             # keep the coarser single-bound check
             if floors and STREAM_ID in batch_df.columns:
                 fdf = self.spark.createDataFrame(
-                    [(sid, int(t)) for sid, t in floors.items()],
-                    "__sid binary, __floor long",
+                    [
+                        (sid, int(t), self.floors0.get(sid))
+                        for sid, t in floors.items()
+                    ],
+                    "__sid binary, __floor long, __floor0 long",
                 )
                 src = batch_df.join(
                     F.broadcast(fdf),
@@ -195,6 +184,7 @@ class StreamingReplay:
                 # rows below the applied end are genuinely late (bounded
                 # below by the global resume floor, as before)
                 own_floor = F.coalesce(F.col("__floor"), F.lit(lo_bound))
+                saved_floor = F.coalesce(F.col("__floor0"), F.lit(lo_bound))
             if track_late:
                 aggs.append(
                     F.sum(
@@ -206,10 +196,12 @@ class StreamingReplay:
                     ).alias("n_late")
                 )
             if track_absorb:
-                # rows the apply path will never fold: below their own
-                # stream's floor (filter_new drops them) or below the
-                # resume floor (windows never rescan there)
-                below = F.col(TIME_MS) < own_floor
+                # rows presumed applied BEFORE this run: below their own
+                # stream's floor saved then (filter_new drops them) or
+                # below the resume floor (windows never rescan there).
+                # Not the live floors: rows this run applied itself and
+                # a later-discovered file redelivers are not absorbed
+                below = F.col(TIME_MS) < saved_floor
                 aggs.append(
                     F.sum(F.when(below, 1).otherwise(0)).alias("n_absorbed")
                 )
@@ -237,17 +229,13 @@ class StreamingReplay:
         if self.frontier_ms is None or r["mx"] > self.frontier_ms:
             self.frontier_ms = int(r["mx"])
         if self.floor_ms is None:
-            # resume: max(user lower, saved per-stream minimum) — C4
-            # (stream_reader.rs:226-244).  The batch's min is only the
-            # floor when no checkpoint exists; otherwise the saved
-            # watermark wins — unapplied rows may sit below this batch.
-            floors = self.wm.stream_floors()
-            if floors:
-                self.floor_ms = self.resume_floor_ms = min(floors.values())
-                hi = max(floors.values())
-                if hi > self.floor_ms:
-                    self.catchup_end_ms = hi
-            else:
+            # resume: the saved per-stream minimum — C4
+            # (stream_reader.rs:226-244; the planner raises it to the
+            # user's start).  The batch's min is only the floor when no
+            # checkpoint exists; otherwise the saved watermark wins —
+            # unapplied rows may sit below this batch.
+            self.floor_ms = self.resume_floor_ms
+            if self.floor_ms is None:
                 self.floor_ms = int(r["mn"])
         else:
             if self.applied_end_ms is not None and (r["n_late"] or 0) > 0:
@@ -279,19 +267,21 @@ class StreamingReplay:
                 # consulting the target table — the repair path for that
                 # is plans.pipeline.repair_span over the suspect span
                 # (the idempotent merge makes it safe to over-apply).
-        safe_end = self.frontier_ms - self.cfg.safety_interval_ms
-        if self.cfg.end_timestamp_ms is not None:
-            safe_end = min(safe_end, self.cfg.end_timestamp_ms)
-        self._apply_upto(safe_end)
+        self._apply_upto(self.frontier_ms - self.cfg.safety_interval_ms)
 
     # ---------- runs ----------
 
-    def _source(self):
+    def _start(self, **trigger):
+        """The log dir as a file source, one ``_on_batch`` per trigger."""
         schema = self.spark.read.parquet(self.cfg.log_path).schema
         return (
             self.spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", self.cfg.max_files_per_trigger)
             .parquet(self.cfg.log_path)
+            .writeStream.foreachBatch(self._on_batch)
+            .option("checkpointLocation", self.cfg.checkpoint_location)
+            .trigger(**trigger)
+            .start()
         )
 
     def run_continuous(self, poll_interval_s: float | None = None):
@@ -306,32 +296,40 @@ class StreamingReplay:
         if poll_interval_s is None:
             # builder's sleep_interval (log_reader.rs:40-44 default)
             poll_interval_s = self.cfg.sleep_interval_ms / 1000.0
-        return (
-            self._source()
-            .writeStream.foreachBatch(self._on_batch)
-            .option("checkpointLocation", self.cfg.checkpoint_location)
-            .trigger(processingTime=f"{poll_interval_s} seconds")
-            .start()
-        )
+        return self._start(processingTime=f"{poll_interval_s} seconds")
 
     def run_available_now(self, drain: bool = True) -> int:
         """Bounded replay of everything currently in the log dir."""
-        q = (
-            self._source()
-            .writeStream.foreachBatch(self._on_batch)
-            .option("checkpointLocation", self.cfg.checkpoint_location)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        self._start(availableNow=True).awaitTermination()
         if drain and self.frontier_ms is not None:
             # end of bounded run: no more data can arrive — flush the
             # safety tail (stop_at semantics, stream_reader.rs:336-340)
-            end = self.frontier_ms + 1
-            if self.cfg.end_timestamp_ms is not None:
-                end = min(end, self.cfg.end_timestamp_ms)
-            self._apply_upto(end)
+            self._apply_upto(self.frontier_ms + 1)
         return self.n_applied
+
+
+def stream_generation(
+    spark: SparkSession,
+    cfg: CDCPipelineConfig,
+    gen: LogGeneration,
+    collection_modes: dict[str, str] | None = None,
+    key: str = "doc_id",
+) -> int:
+    """One generation as a bounded streaming run, drained to its end:
+    the barrier — it is fully applied before the next opens
+    (log_reader.rs:171-188).  The source and the frontier read the
+    generation's own partition dir (or the flat log cut to its epoch);
+    each generation keeps its own streaming checkpoint."""
+    ecfg = dataclasses.replace(
+        cfg,
+        log_path=gen.path,
+        checkpoint_location=f"{cfg.checkpoint_location}/epoch={gen.epoch}",
+    )
+    sr = StreamingReplay(
+        spark, ecfg, collection_modes=collection_modes, key=key,
+        generation=gen.epoch,
+    )
+    return sr.run_available_now(drain=True)
 
 
 def run_streaming_epochs(
@@ -342,27 +340,8 @@ def run_streaming_epochs(
 ) -> int:
     """Generation barrier over streaming runs: one bounded streaming
     replay per epoch, strictly sequential (O3, log_reader.rs:171-236)."""
-    from scylla_cdc_rust_spark.sources.log_source import epochs_present
-
-    epochs = epochs_present(cfg.log_path) or [0]
-    wm = WatermarkStore(
-        spark, cfg.watermark_path,
-        save=cfg.save_progress, load=cfg.load_progress,
+    wm = WatermarkStore.from_config(spark, cfg)
+    return sum(
+        stream_generation(spark, cfg, gen, collection_modes, key)
+        for gen in log_generations(spark, cfg, wm)
     )
-    start_gen = wm.last_generation()
-    total = 0
-    for ep in epochs:
-        if start_gen is not None and ep < start_gen:
-            continue
-        import os
-
-        ecfg = CDCPipelineConfig(**{**cfg.__dict__})
-        ecfg.checkpoint_location = f"{cfg.checkpoint_location}/epoch={ep}"
-        ep_dir = os.path.join(cfg.log_path, f"epoch={ep}")
-        if os.path.isdir(ep_dir):
-            ecfg.log_path = ep_dir  # scope source + frontier to this generation
-        sr = StreamingReplay(
-            spark, ecfg, collection_modes=collection_modes, key=key, generation=ep
-        )
-        total += sr.run_available_now(drain=True)
-    return total

@@ -76,3 +76,41 @@ def test_continuous_driver_picks_up_new_generation(spark, tmp_path):
         normalize_engine(table.read_visible().collect()),
         oracle_replay(tbl, collection_modes=MODES),
     )
+
+
+def test_continuous_driver_honours_load_progress(spark, tmp_path):
+    """should_load_progress(false) reaches the driver: a second run
+    ignores the saved progress and replays every generation from
+    scratch, rather than skipping to the saved last generation."""
+    from scylla_cdc_rust_spark.datagen.gen_log import write_log
+
+    tmp = str(tmp_path)
+    tbl = generate_log(LogSpec(n_events=2_000, n_docs=100, seed=41, n_epochs=2))
+    cfg = CDCPipelineConfig(
+        log_path=os.path.join(tmp, "log"),
+        target_path=os.path.join(tmp, "t"),
+        watermark_path=os.path.join(tmp, "wm"),
+        checkpoint_location=os.path.join(tmp, "ck"),
+        window_size_ms=1 << 60,
+        target_num_buckets=4,
+    )
+    write_log(tbl, cfg.log_path)
+    epochs = tbl.column(EPOCH).to_numpy()
+    times = tbl.column(TIME_MS).to_numpy()
+    meta = os.path.join(tmp, "meta")
+    write_generation_metadata(
+        meta, [Generation(e, int(times[epochs == e].min())) for e in (0, 1)], []
+    )
+    first = ContinuousDriver(spark, cfg, meta, MODES)
+    assert first.run(idle_timeout_s=0.2, poll_s=0.1) == tbl.num_rows
+
+    cfg.load_progress = False
+    cfg.checkpoint_location = os.path.join(tmp, "ck2")
+    again = ContinuousDriver(spark, cfg, meta, MODES)
+    assert again.run(idle_timeout_s=0.2, poll_s=0.1) == tbl.num_rows
+    assert again.generations_done == [0, 1]
+    table = ParquetMergeTable(spark, cfg.target_path, num_buckets=4)
+    assert_state_equal(
+        normalize_engine(table.read_visible().collect()),
+        oracle_replay(tbl, collection_modes=MODES),
+    )

@@ -402,10 +402,16 @@ def test_repair_journal_refuses_disjoint_span(spark, tmp_path):
     lo, hi = min(times), max(times) + 1
     # simulate a crash mid-repair of [lo, hi)
     with open(os.path.join(cfg.target_path, REPAIR_JOURNAL), "w") as f:
-        json.dump({"begin_ms": lo, "end_ms": hi, "started_at_ms": 0}, f)
+        json.dump({"begin_ms": lo, "end_ms": hi, "started_at_ms": 0,
+                   "collection_modes": MODES}, f)
     mid = (lo + hi) // 2
     with pytest.raises(RuntimeError, match="recorded span"):
         repair_span(spark, cfg, lo, mid)  # narrower: refused
+    assert pending_repair(cfg) is not None  # journal untouched
+    # the recorded span with other collection modes: refused too, the
+    # reset keys must be re-folded as they were reset
+    with pytest.raises(RuntimeError, match="collection_modes="):
+        repair_span(spark, cfg, lo, hi, {"tokens": "list"})
     assert pending_repair(cfg) is not None  # journal untouched
     repair_span(spark, cfg, lo, hi)  # the recorded span: allowed
     assert pending_repair(cfg) is None  # completed and cleared
@@ -492,3 +498,96 @@ def test_repair_recovery_refuses_empty_span(spark, tmp_path):
     # a first-time no-op span (no journal) still returns 0 silently
     os.remove(os.path.join(cfg.target_path, REPAIR_JOURNAL))
     assert repair_span(spark, cfg, hi + 10, hi + 20) == 0
+
+
+def write_flat_log(tbl, tmp):
+    """The whole log, epoch column included, as ONE parquet file."""
+    import pyarrow.parquet as pq
+
+    d = os.path.join(tmp, "flat")
+    os.makedirs(d)
+    pq.write_table(tbl, os.path.join(d, "part-0.parquet"))
+    return CDCPipelineConfig(
+        log_path=d,
+        target_path=os.path.join(tmp, "target"),
+        watermark_path=os.path.join(tmp, "wm"),
+        checkpoint_location=os.path.join(tmp, "ckpt"),
+        window_size_ms=300_000,
+        safety_interval_ms=200_000,
+        target_num_buckets=8,
+    )
+
+
+def test_streaming_flat_log_applies_every_generation(spark, tmp_path):
+    """A non-partitioned log holding two generations: the streaming
+    epoch runner finds both from the log's epoch column, as batch replay
+    does, instead of streaming generation 0 only."""
+    tbl = generate_log(LogSpec(n_events=2_000, n_docs=100, seed=5, n_epochs=2))
+    cfg = write_flat_log(tbl, str(tmp_path))
+    n = run_streaming_epochs(spark, cfg, MODES)
+    assert n == tbl.num_rows
+    assert_state_equal(visible(spark, cfg), oracle_replay(tbl, collection_modes=MODES))
+
+
+def test_start_timestamp_skips_earlier_events(spark, tmp_path):
+    """``start_timestamp``: batch replay and streaming each apply exactly
+    the events at or after it, and the target is the fold of those."""
+    import numpy as np
+    import pyarrow as pa
+
+    from scylla_cdc_rust_spark.model import TIME_MS
+    from scylla_cdc_rust_spark.plans.pipeline import replay
+
+    tbl = generate_log(LogSpec(n_events=2_000, n_docs=100, seed=5, n_epochs=2))
+    times = tbl.column(TIME_MS).to_numpy()
+    start = int(np.median(times))
+    kept = tbl.filter(pa.array(times >= start))
+    expected = oracle_replay(kept, collection_modes=MODES)
+    assert 0 < kept.num_rows < tbl.num_rows
+
+    cfg = write_flat_log(tbl, str(tmp_path / "batch"))
+    cfg.start_timestamp_ms = start
+    assert replay(spark, cfg, MODES).n_events == kept.num_rows
+    assert_state_equal(visible(spark, cfg), expected)
+
+    cfg = write_flat_log(tbl, str(tmp_path / "stream"))
+    cfg.start_timestamp_ms = start
+    assert run_streaming_epochs(spark, cfg, MODES) == kept.num_rows
+    assert_state_equal(visible(spark, cfg), expected)
+
+
+def test_resume_absorb_count_uses_floors_saved_before_run(spark, tmp_path, caplog):
+    """A resumed run whose files are discovered out of time order: the
+    first batch's windows apply (from the whole log dir) rows that a
+    later-discovered file then redelivers.  Those rows sit below their
+    stream's LIVE floor, but above the floor saved before the run, so
+    they are neither absorbed nor late: no repair warning, and
+    ``min_absorbed_ms`` never exceeds ``resume_floor_ms``."""
+    import logging
+
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from scylla_cdc_rust_spark.model import TIME_MS
+    from scylla_cdc_rust_spark.plans.pipeline import replay
+
+    tbl = generate_log(LogSpec(n_events=2_000, n_docs=100, seed=7))
+    cfg = make_cfg(str(tmp_path), tbl, safety_interval_ms=0)
+    times = tbl.column(TIME_MS).to_numpy()
+    q1, q2 = (int(q) for q in np.quantile(times, [0.25, 0.5]))
+    # the earlier run applied everything before q1
+    first = CDCPipelineConfig(**{**cfg.__dict__, "end_timestamp_ms": q1})
+    replay(spark, first, MODES)
+
+    log = spark.read.parquet(cfg.log_path)
+    sr = StreamingReplay(spark, cfg, MODES)
+    assert sr.resume_floor_ms is not None
+    with caplog.at_level(logging.WARNING):
+        sr._on_batch(log.where(F.col(TIME_MS) >= q2), 0)  # applies [floor, end]
+        sr._on_batch(log.where((F.col(TIME_MS) >= q1) & (F.col(TIME_MS) < q2)), 1)
+    sr._apply_upto(sr.frontier_ms + 1)  # the drain of a bounded run
+    assert sr.n_absorbed_below_floor == 0
+    assert sr.min_absorbed_ms is None
+    assert "absorbed" not in caplog.text
+    assert sr.n_applied == int((times >= q1).sum())
+    assert_state_equal(visible(spark, cfg), oracle_replay(tbl, collection_modes=MODES))
